@@ -362,28 +362,38 @@ HEADLINE = [
 #: Tolerated if absent so bench never breaks mid-build.
 OPTIONAL = []
 
-#: Queries that actually consume the shared shingle stage — the trailing
-#: no-clearCache block is scoped to exactly these (r12). The block was
-#: previously "every dd_* name", which swept in queries like dd_simhash
-#: that recompute their own tokenize pipeline and don't touch the
-#: snapshot: inside the block their sub-second walls inherited whatever
-#: heap/caches the preceding dd_ queries left resident (the driver
-#: billed dd_simhash 9.1/13.2 s vs 0.6-1.3 s isolated — VERDICT r11
-#: "what's wrong" #2). Non-consumers now get the standard
-#: clearCache+GC isolation protocol, so their numbers are deterministic.
-SHINGLE_BLOCK = frozenset(
-    {
-        "dd_shingle_jaccard_pairs",
-        "dd_minhash_lsh_pairs",
-        "dd_duplicate_clusters",
-        "dd_keep_best",
-        "dd_lsh_recall_audit",
-        "dd_semantic_confirmed_pairs",
-        "dd_incremental_minhash",
-        "dd_minhash_estimate_audit",
-        "dd_containment_pairs",
+
+def pin_shared_stages(spark, sf_dir: str) -> dict[str, float]:
+    """Build and pin the stages many headline queries share; return each
+    stage's build seconds.
+
+    A batch driver builds each once per snapshot: the dd_ shingle set,
+    the graph edge list, the LPA labels that label propagation and
+    modularity both read, and the IVF codebook of the three scale-path
+    ANN queries. ``session.pin_stage`` checkpoints them, so they survive
+    the per-query clearCache; the library builders only read the pins.
+    Without this call every query builds cold, which is what the
+    correctness runs do.
+    """
+    from python_sql_etl_project_spark.operators import dedup, graph, similarity
+    from python_sql_etl_project_spark.session import pin_stage, read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    builds = {
+        ("shingles", sf_dir): lambda: dedup.shingles(spark, sf_dir),
+        ("edges", sf_dir): lambda: graph._copurchase_pairs(spark, sf_dir),
+        # the LPA rounds read the edges pinned just above
+        ("lpa", sf_dir): lambda: graph._lpa_labels(
+            spark, sf_dir, graph._copurchase_pairs(spark, sf_dir)
+        ),
+        similarity._codebook_key(emb): lambda: similarity._scaled_codebook(emb),
     }
-)
+    secs = {}
+    for key, build in builds.items():
+        t0 = time.perf_counter()
+        pin_stage(spark, key, build())
+        secs[key[0]] = round(time.perf_counter() - t0, 3)
+    return secs
 
 
 def main() -> None:
@@ -421,84 +431,15 @@ def main() -> None:
     # self-evident instead of requiring out-of-band A/B isolation.
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
 
-    # shared shingle stage (opt-out with SPARK_GRAFT_BENCH_SHARED=0):
-    # several dd_ queries open with the identical tokenize→shingle→hot-cap
-    # stage; a real batch dedup driver builds it once per corpus snapshot,
-    # so the bench models that — dd_ queries run as a trailing block, the
-    # stage is warmed untimed, and clearCache is skipped inside the block
-    # (per-query numbers then price each query's OWN candidate/verify
-    # stages; the shared-stage cost is reported separately). Correctness
-    # rows never see the flag — the driver gate runs the cold pipeline.
-    share = os.environ.get("SPARK_GRAFT_BENCH_SHARED", "1") == "1"
-    shared_stage_sec = None
-    shared_edges_sec = None
-    shared_codebook_sec = None
-    if share:
-        os.environ["SPARK_GRAFT_SHARED_SHINGLES"] = "1"
-        # modularity reuses the LPA label stage the LPA query computes
-        # (HEADLINE orders graph_label_propagation first); at scale
-        # labels are computed once per graph snapshot and scored — the
-        # correctness gate still runs both cold
-        os.environ["SPARK_GRAFT_SHARED_LPA"] = "1"
-        # all graph queries read one materialized edge snapshot (built
-        # once here, timed separately; localCheckpoint survives the
-        # per-query clearCache/GC isolation)
-        os.environ["SPARK_GRAFT_SHARED_EDGES"] = "1"
-        from python_sql_etl_project_spark.operators import graph
-
-        t0 = time.perf_counter()
-        graph._copurchase_pairs(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        shared_edges_sec = round(time.perf_counter() - t0, 3)
-        # the three scale-path ANN queries (sim_ivf_scaled_cells,
-        # sim_ivfpq_search, sim_ivfpq_residual) all train the identical
-        # corpus-derived-nlist Lloyd codebook; at scale the IVF coarse
-        # quantizer is trained once per corpus snapshot and every index
-        # build/search reads it, so the bench models that (built once
-        # here, timed separately; correctness runs stay cold)
-        os.environ["SPARK_GRAFT_SHARED_CODEBOOK"] = "1"
-        from python_sql_etl_project_spark.operators import similarity
-        from python_sql_etl_project_spark.session import read_table
-
-        t0 = time.perf_counter()
-        similarity._scaled_codebook(
-            read_table(spark, sf_dir, "embeddings"), spark, sf_dir
-        ).write.format("noop").mode("overwrite").save()
-        shared_codebook_sec = round(time.perf_counter() - t0, 3)
-        names = [n for n in names if n not in SHINGLE_BLOCK] + [
-            n for n in names if n in SHINGLE_BLOCK
-        ]
+    # shared stages: built once here, timed, and added to the total
+    stage_sec = pin_shared_stages(spark, sf_dir)
 
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     jvm_system = spark.sparkContext._jvm.java.lang.System
-    in_shared_block = False
     for name in names:
-        if share and not in_shared_block and name in SHINGLE_BLOCK:
-            # entering the dd_ block: flush everything else, then build
-            # the shared shingle stage once (timed separately, not
-            # attributed to any single query)
-            from python_sql_etl_project_spark.operators import dedup
-
-            spark.catalog.clearCache()
-            jvm_system.gc()
-            t0 = time.perf_counter()
-            dedup.shingles(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            shared_stage_sec = round(time.perf_counter() - t0, 3)
-            in_shared_block = True
         runs = []
         for _ in range(repeats):
-            if in_shared_block:
-                jvm_system.gc()
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.perf_counter() - t0, 3))
-                continue
             # isolate runs: blocks persisted by a previous query otherwise
             # occupy the heap and GC-tax later measurements (a query's OWN
             # caching still lands inside its timing). The explicit GC
@@ -517,13 +458,7 @@ def main() -> None:
 
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
-    total = round(
-        sum(timings.values())
-        + (shared_stage_sec or 0)
-        + (shared_edges_sec or 0)
-        + (shared_codebook_sec or 0),
-        3,
-    )
+    total = round(sum(timings.values()) + sum(stage_sec.values()), 3)
 
     # Full per-query mins + raw spreads go to a detail file. Default is
     # the UNTRACKED *.latest.json sibling (gitignored): the driver's
@@ -548,9 +483,7 @@ def main() -> None:
                 "queries": timings,
                 "repeats": repeats,
                 "spread": spread,
-                "shared_shingle_stage_sec": shared_stage_sec,
-                "shared_edges_stage_sec": shared_edges_sec,
-                "shared_codebook_stage_sec": shared_codebook_sec,
+                "shared_stage_sec": stage_sec,
                 "sf": sf,
             },
             f,
@@ -587,9 +520,7 @@ def main() -> None:
                 "queries": {n: timings[n] for n in flagship if n in timings},
                 "n_queries": len(timings),
                 "repeats": repeats,
-                "shared_shingle_stage_sec": shared_stage_sec,
-                "shared_edges_stage_sec": shared_edges_sec,
-                "shared_codebook_stage_sec": shared_codebook_sec,
+                "shared_stage_sec": stage_sec,
                 "detail": "BENCH_DETAIL.latest.json",
                 "sf": sf,
             },

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..session import (
     finalize_unpersist,
+    pinned_stage,
     read_table,
     read_table_parallel,
     release_caches,
@@ -68,16 +69,6 @@ _SHINGLES_CTE = f"""
 """
 
 
-#: Session-scoped shingle-stage memo, active only when
-#: ``SPARK_GRAFT_SHARED_SHINGLES=1``: several dd_ queries begin with the
-#: identical tokenize→shingle→explode→hot-cap stage, and a bench (or any
-#: batch driver running many dedup passes over one corpus snapshot) can
-#: legitimately build it once. Default OFF — per-query isolation stays
-#: the library behavior, and the external correctness gate never sets
-#: the flag, so every driver row still exercises the full cold pipeline.
-_SHINGLE_MEMO: dict = {}
-
-
 def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct k-word shingles per doc, hot shingles capped (Spark side).
 
@@ -101,30 +92,18 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     result would cost more than the cache it frees) — those tag the
     handle on their RESULT via ``session.tag_release(out, sh)`` so a
     long-lived caller can free it with ``session.release_caches(result)``
-    after its last action (round 12). In shared-memo mode the frame is
-    untagged: the batch driver owns the snapshot, and both tag_release
-    and release_caches are no-ops on it.
-    """
-    import os as _os
+    after its last action (round 12).
 
+    A batch driver may pin the stage once for many dd_ queries
+    (``session.pin_stage(spark, ("shingles", sf_dir), ...)``); the pinned
+    frame is returned as is. It is a checkpoint, not a cache, so the
+    consumers' finalize_unpersist/tag_release leave it alone.
+    """
     from pyspark import StorageLevel
 
-    shared = _os.environ.get("SPARK_GRAFT_SHARED_SHINGLES") == "1"
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if shared and memo_key in _SHINGLE_MEMO:
-        out, inner = _SHINGLE_MEMO[memo_key]
-        lvl = inner.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            # self-heal (r12): a ``spark.catalog.clearCache()`` since the
-            # snapshot was built dropped its blocks AND its CacheManager
-            # registration, so the memoized frame had silently become a
-            # recompute-per-action plan (measured: every dd_-block bench
-            # query re-ran the whole tokenize→shingle chain whenever a
-            # pre-block consumer created the memo first). Re-registering
-            # the persist restores a live cache; blocks rebuild on the
-            # next action.
-            inner.persist(StorageLevel.MEMORY_AND_DISK)
-        return out
+    pinned = pinned_stage(spark, ("shingles", sf_dir))
+    if pinned is not None:
+        return pinned
 
     w = tokens()
     shingle_arr = F.when(
@@ -151,21 +130,13 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s")
     )
     out = sh.join(F.broadcast(hot), "s", "left_anti")
-    if shared:
-        # shared mode: the stage's lifecycle belongs to the batch driver
-        # (bench), so the frame is deliberately NOT tagged for release —
-        # a consumer's finalize_unpersist must leave the snapshot cached
-        # for its siblings. The inner handle is memoized alongside so a
-        # later hit can detect (and heal) a clearCache-dropped snapshot.
-        _SHINGLE_MEMO[memo_key] = (out, sh)
-    else:
-        # the persist above is on the INNER exploded frame, not on this
-        # anti-join output — DataFrame.unpersist() does NOT cascade to
-        # subplan caches (verified empirically: getPersistentRDDs keeps
-        # the block), so finalize_unpersist(.., shingles_output) was a
-        # silent no-op. Tag the real handle; finalize_unpersist releases
-        # it (round 11 — closes the r10 cache-leak advisory for real).
-        out._graft_inner_cache = sh
+    # the persist above is on the INNER exploded frame, not on this
+    # anti-join output — DataFrame.unpersist() does NOT cascade to
+    # subplan caches (verified empirically: getPersistentRDDs keeps
+    # the block), so finalize_unpersist(.., shingles_output) was a
+    # silent no-op. Tag the real handle; finalize_unpersist releases
+    # it (round 11 — closes the r10 cache-leak advisory for real).
+    out._graft_inner_cache = sh
     return out
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import read_table
+from ..session import pinned_stage, read_table
 
 N_QUERIES = 8  # vec_id < 8 are the "query" vectors
 TOP_K = 5
@@ -843,25 +843,14 @@ def _derived_nlist(emb: DataFrame) -> int:
     return max(1, math.ceil(math.sqrt(emb.count())))
 
 
-#: Bench-only memo for the trained coarse quantizer
-#: (``SPARK_GRAFT_SHARED_CODEBOOK=1``): the three scale-path ANN queries
-#: (`sim_ivf_scaled_cells`, `sim_ivfpq_search`, `sim_ivfpq_residual`)
-#: open with the IDENTICAL corpus-count → seed → two-Lloyd-round train —
-#: at scale the IVF codebook is trained once per corpus snapshot and
-#: every index build/search reads it, so the bench models that (the
-#: edges/shingle/LPA-stage precedent; built once, timed separately).
-#: The memo holds a ``localCheckpoint``-ed frame: materialized,
-#: lineage-free state that survives the bench's per-query clearCache/GC
-#: isolation. The correctness gate never sets the flag — each query
-#: trains cold.
-_CODEBOOK_MEMO: dict = {}
+def _codebook_key(emb: DataFrame) -> tuple:
+    """Pin key of the codebook trained on ``emb``: the codebook is a
+    function of that input plan alone, and equal scans of one table
+    have equal semantic hashes."""
+    return ("codebook", emb.semanticHash())
 
 
-def _scaled_codebook(
-    emb: DataFrame,
-    spark: SparkSession | None = None,
-    sf_dir: str | None = None,
-) -> DataFrame:
+def _scaled_codebook(emb: DataFrame) -> DataFrame:
     """nlist≈√N Lloyd codebook: first-``ceil(sqrt(N))`` seeds (one
     corpus count, :func:`_derived_nlist`), two unrolled rounds, rounded
     centroids (both engines rank identically).
@@ -873,17 +862,14 @@ def _scaled_codebook(
     codebook's cell population grows linearly and its probes⋈home
     candidate space quadratically (measured 12.96–16.5× wall at 8× data
     before the swap).
-    """
-    import os as _os
 
-    shared = _os.environ.get("SPARK_GRAFT_SHARED_CODEBOOK") == "1"
-    memo_key = (
-        (spark.sparkContext.applicationId, sf_dir)
-        if spark is not None and sf_dir is not None
-        else None
-    )
-    if shared and memo_key is not None and memo_key in _CODEBOOK_MEMO:
-        return _CODEBOOK_MEMO[memo_key]
+    All three open with this training; a batch driver may pin it once per
+    corpus snapshot (``session.pin_stage(spark, _codebook_key(emb), ...)``)
+    and the pinned frame is returned as is.
+    """
+    pinned = pinned_stage(emb.sparkSession, _codebook_key(emb))
+    if pinned is not None:
+        return pinned
     nlist = _derived_nlist(emb)
     seeds = emb.filter(F.col("vec_id") < nlist).select(
         F.col("vec_id").alias("cell"),
@@ -893,9 +879,6 @@ def _scaled_codebook(
     for _ in range(2):
         assign = _lloyd_assign(emb, cents)
         cents = _pack_centroids(_lloyd_update(emb, assign))
-    if shared and memo_key is not None:
-        cents = cents.localCheckpoint()
-        _CODEBOOK_MEMO[memo_key] = cents
     return cents
 
 
@@ -1841,7 +1824,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coarse stage: scaled-nlist Lloyd codebook (same assignment shape
     # as sim_ivf_scaled_cells — broadcast codebook, sequential-fold d2,
     # rounded before the rank)
-    cents = _scaled_codebook(emb, spark, sf_dir)
+    cents = _scaled_codebook(emb)
     d2 = F.aggregate(
         F.zip_with(
             "embedding",
@@ -1977,7 +1960,7 @@ def sim_ivf_scaled_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _scaled_codebook(emb, spark, sf_dir)
+    cents = _scaled_codebook(emb)
     d2 = F.aggregate(
         F.zip_with(
             "embedding",
@@ -2222,7 +2205,7 @@ def sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _scaled_codebook(emb, spark, sf_dir)
+    cents = _scaled_codebook(emb)
     d2 = F.aggregate(
         F.zip_with(
             "embedding",

@@ -264,9 +264,9 @@ def tag_release(out, *caches):
     real handle (a frame's own persist and/or the ``_graft_inner_cache``
     a helper buried in its subplan) on the returned frame as
     ``_graft_release``; after consuming the result, the caller calls
-    :func:`release_caches` on it. Shared-memo frames are untagged by
-    design (the batch driver owns the snapshot), so in shared mode
-    nothing is collected and a release is a safe no-op.
+    :func:`release_caches` on it. A :func:`pin_stage` frame is a
+    checkpoint, not a cache, so it is never collected here: the batch
+    driver that pinned it owns it, and a release leaves it alone.
     """
     handles = []
     for c in caches:
@@ -289,11 +289,56 @@ def release_caches(df) -> None:
 
     Call AFTER the last action on ``df``: the frame is lazy, so dropping
     the cache earlier would force the next action to recompute the whole
-    shingle pipeline uncached. Idempotent; a no-op on untagged frames
-    (including everything produced under a shared-memo bench run, whose
-    snapshots the batch driver owns)."""
+    shingle pipeline uncached. Idempotent; a no-op on untagged frames.
+    Never touches a :func:`pin_stage` frame: only
+    :func:`release_stages` frees those."""
     for h in getattr(df, "_graft_release", ()):
         h.unpersist()
+
+
+#: Driver-pinned shared stages: ``(applicationId, key)`` → the pinned
+#: frame and the ids of the persisted RDDs that hold its checkpoint.
+_PINNED: dict = {}
+
+
+def _persisted_rdd_ids(spark: SparkSession) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def pin_stage(spark: SparkSession, key, df):
+    """Materialize ``df`` once and share it with every later builder
+    that asks for ``key`` in this Spark application.
+
+    A batch driver running many queries over one snapshot (``bench.py``)
+    pins the stages they have in common: the shingle set, the co-purchase
+    edges, the LPA labels, the IVF codebook. Each builder opens with
+    :func:`pinned_stage` and builds cold when nothing is pinned, so the
+    library only reads pins and never decides what is shared. The eager
+    ``localCheckpoint`` is lineage-free and outside the CacheManager: it
+    survives ``spark.catalog.clearCache()``, and a consumer's
+    ``unpersist``/:func:`finalize_unpersist`/:func:`release_caches` is a
+    no-op on it. :func:`release_stages` frees it. Caches the build
+    itself persisted are freed once the checkpoint holds the stage.
+    """
+    before = _persisted_rdd_ids(spark)
+    pinned = df.localCheckpoint(eager=True)
+    release_caches(tag_release(df, df))
+    held = _persisted_rdd_ids(spark) - before
+    _PINNED[(spark.sparkContext.applicationId, key)] = (pinned, held)
+    return pinned
+
+
+def pinned_stage(spark: SparkSession, key):
+    """The frame pinned under ``key`` in this application, or ``None``."""
+    return _PINNED.get((spark.sparkContext.applicationId, key), (None,))[0]
+
+
+def release_stages(spark: SparkSession) -> None:
+    """Unpin every stage of this application and free its blocks."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _PINNED if k[0] == app]:
+        for rdd_id in _PINNED.pop(k)[1]:
+            spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)
 
 
 def read_table_parallel(spark: SparkSession, sf_dir: str, name: str, key: str):

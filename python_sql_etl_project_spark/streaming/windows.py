@@ -109,7 +109,7 @@ def stream_events(
     return raw
 
 
-def _stream_state_partitions(spark: SparkSession) -> str:
+def _stream_state_partitions() -> str:
     """Shuffle-partition count for STATEFUL streaming runs (r13, guide
     §5 / r12-verdict item #1).
 
@@ -160,9 +160,7 @@ def _run_to_table(
     checkpoint = tempfile.mkdtemp(prefix=f"ck_{name}_")
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", _stream_state_partitions(spark)
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_partitions())
         q = (
             df.writeStream.format("memory")
             .queryName(name)

@@ -9,8 +9,9 @@ persisted handle on its returned frame (``_graft_inner_cache``) and
 
 * result-sized shingle consumers leave NO corpus-sized cached blocks
   behind (only their own 1-partition result checkpoint may remain);
-* in shared-memo mode the frame is untagged, so a consumer's finalize
-  must LEAVE the snapshot cached for its siblings (the bench contract).
+* a stage a batch driver pinned (``session.pin_stage``) is untagged, so
+  a consumer's finalize/release must LEAVE it for its siblings (the
+  bench contract), and only ``session.release_stages`` frees it.
 """
 
 from __future__ import annotations
@@ -18,7 +19,13 @@ from __future__ import annotations
 import pytest
 
 from python_sql_etl_project_spark import registry
-from python_sql_etl_project_spark.operators import dedup
+from python_sql_etl_project_spark.operators import dedup, graph
+from python_sql_etl_project_spark.session import (
+    pin_stage,
+    pinned_stage,
+    release_caches,
+    release_stages,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -66,28 +73,49 @@ def test_result_sized_consumers_release_shingle_cache(spark, name):
     )
 
 
-def test_shared_memo_frame_is_not_released(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SHINGLES", "1")
+def _pin(spark, key, df):
+    """Pin ``df`` as a batch driver does; return it and the ids of the
+    persisted RDDs that hold it."""
+    before = set(_persistent_rdds(spark))
+    pinned = pin_stage(spark, key, df)
+    return pinned, set(_persistent_rdds(spark)) - before
+
+
+def test_shared_memo_frame_is_not_released(spark):
+    """A pinned shingle stage carries no release handle, and a releasing
+    consumer run against it must leave it in place for its siblings."""
     spark.catalog.clearCache()
-    dedup._SHINGLE_MEMO.clear()
     try:
+        pinned, held = _pin(spark, ("shingles", SF), dedup.shingles(spark, SF))
+        assert held, "the pinned stage should hold persisted blocks"
         sh = dedup.shingles(spark, SF)
-        assert not hasattr(sh, "_graft_inner_cache")
-        sh.count()
-        cached_before = {
-            rid for rid, p in _persistent_rdds(spark).items() if p > 1
-        }
-        assert cached_before, "shared stage should be persisted"
-        # a releasing consumer runs against the shared snapshot...
+        assert sh is pinned and not hasattr(sh, "_graft_inner_cache")
+        # a releasing consumer runs against the pinned stage...
         registry.QUERIES["txt_novelty_decay_curve"](spark, SF).count()
-        cached_after = {
-            rid for rid, p in _persistent_rdds(spark).items() if p > 1
-        }
-        # ...and must leave it cached for siblings
-        assert cached_before <= cached_after
+        # ...and must leave it in place for siblings
+        assert held <= set(_persistent_rdds(spark))
     finally:
-        dedup._SHINGLE_MEMO.clear()
+        release_stages(spark)
         spark.catalog.clearCache()
+
+
+def test_pinned_stage_survives_clear_cache_until_released(spark):
+    """A pinned stage outlives the bench's per-query clearCache and is
+    gone, blocks included, after release_stages."""
+    key = ("edges", SF)
+    spark.catalog.clearCache()
+    try:
+        pinned, held = _pin(spark, key, graph._copurchase_pairs(spark, SF))
+        assert held
+        n = pinned.count()
+        spark.catalog.clearCache()
+        assert graph._copurchase_pairs(spark, SF) is pinned
+        assert held <= set(_persistent_rdds(spark))
+        assert pinned.count() == n
+    finally:
+        release_stages(spark)
+    assert pinned_stage(spark, key) is None
+    assert not held & set(_persistent_rdds(spark))
 
 
 #: every pair-/batch-grain query returning a LAZY frame over a persisted
@@ -109,8 +137,6 @@ def test_pair_grain_query_supports_caller_managed_release(spark, name):
     cache live (recompute-safety for further actions), but tag it on
     their result so a long-lived caller can free it with
     ``session.release_caches`` after the last action."""
-    from python_sql_etl_project_spark.session import release_caches
-
     spark.catalog.clearCache()
     out = registry.QUERIES[name](spark, SF)
     out.count()
@@ -124,23 +150,20 @@ def test_pair_grain_query_supports_caller_managed_release(spark, name):
     assert _cache_manager_empty(spark)
 
 
-def test_release_is_noop_on_shared_memo_snapshot(spark, monkeypatch):
-    """In shared-memo mode the snapshot belongs to the batch driver:
-    the pair-grain result carries no release tag, so a caller's
-    release_caches must leave the snapshot cached for siblings."""
-    from python_sql_etl_project_spark.session import release_caches
-
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SHINGLES", "1")
+def test_release_is_noop_on_shared_memo_snapshot(spark):
+    """A pinned shingle stage belongs to the batch driver: the pair-grain
+    result carries no release tag, so a caller's release_caches must
+    leave the stage in place for siblings."""
     spark.catalog.clearCache()
-    dedup._SHINGLE_MEMO.clear()
     try:
+        _, held = _pin(spark, ("shingles", SF), dedup.shingles(spark, SF))
         out = registry.QUERIES["dd_shingle_jaccard_pairs"](spark, SF)
         out.count()
-        assert not _cache_manager_empty(spark)
+        assert not hasattr(out, "_graft_release")
         release_caches(out)
-        assert not _cache_manager_empty(spark)
+        assert held <= set(_persistent_rdds(spark))
     finally:
-        dedup._SHINGLE_MEMO.clear()
+        release_stages(spark)
         spark.catalog.clearCache()
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from python_sql_etl_project_spark.load.incremental import Warehouse
@@ -545,24 +546,49 @@ def test_decode_image_via_pillow():
     assert decode_image(buf.getvalue()) == (3, 2)
 
 
-def test_shared_shingle_stage_parity(spark, monkeypatch):
-    """SPARK_GRAFT_SHARED_SHINGLES=1 memoizes the shingle stage per
-    (session, sf_dir) — results must be identical to the cold path and
-    the second call must reuse the exact same DataFrame object."""
-    from python_sql_etl_project_spark.operators import dedup
+def _stage_builders(spark):
+    from python_sql_etl_project_spark.operators import dedup, graph, similarity
+    from python_sql_etl_project_spark.session import read_table
 
-    cold = dedup.dd_shingle_jaccard_pairs(spark, SF_DIR).collect()
+    emb = read_table(spark, SF_DIR, "embeddings")
+    return {
+        "shingles": lambda: dedup.shingles(spark, SF_DIR),
+        "edges": lambda: graph._copurchase_pairs(spark, SF_DIR),
+        "lpa": lambda: graph._lpa_labels(
+            spark, SF_DIR, graph._copurchase_pairs(spark, SF_DIR)
+        ),
+        "codebook": lambda: similarity._scaled_codebook(emb),
+    }
 
-    monkeypatch.setenv("SPARK_GRAFT_SHARED_SHINGLES", "1")
-    dedup._SHINGLE_MEMO.clear()
+
+@pytest.mark.parametrize(
+    "stage, consumer",
+    [
+        ("shingles", "dd_shingle_jaccard_pairs"),
+        ("edges", "graph_degree_distribution"),
+        ("lpa", "graph_modularity"),
+        ("codebook", "sim_ivfpq_search"),
+    ],
+)
+def test_pinned_stage_parity(spark, stage, consumer):
+    """The stages bench.py pins give results identical to the cold path,
+    and once pinned the builder returns the exact same DataFrame object."""
+    from bench import pin_shared_stages
+    from python_sql_etl_project_spark import registry
+    from python_sql_etl_project_spark.session import release_stages
+
+    from .parity import canonicalize
+
+    query = registry.all_queries()[consumer]
+    cold = canonicalize(query(spark, SF_DIR).toPandas())
     try:
-        warm1 = dedup.shingles(spark, SF_DIR)
-        warm2 = dedup.shingles(spark, SF_DIR)
-        assert warm1 is warm2
-        shared = dedup.dd_shingle_jaccard_pairs(spark, SF_DIR).collect()
+        assert stage in pin_shared_stages(spark, SF_DIR)
+        build = _stage_builders(spark)[stage]
+        assert build() is build()
+        pinned = canonicalize(query(spark, SF_DIR).toPandas())
     finally:
-        dedup._SHINGLE_MEMO.clear()
-    assert sorted(map(tuple, cold)) == sorted(map(tuple, shared))
+        release_stages(spark)
+    assert cold == pinned
 
 
 def test_compact_parquet_reduces_files_losslessly(spark, tmp_path):

@@ -25,14 +25,8 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("-n", "--repeats", type=int, default=3)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--shared", action="store_true", help="set the bench shared-stage env flags")
+    ap.add_argument("--shared", action="store_true", help="pin the bench shared stages first")
     args = ap.parse_args()
-
-    if args.shared:
-        os.environ["SPARK_GRAFT_SHARED_SHINGLES"] = "1"
-        os.environ["SPARK_GRAFT_SHARED_LPA"] = "1"
-        os.environ["SPARK_GRAFT_SHARED_EDGES"] = "1"
-        os.environ["SPARK_GRAFT_SHARED_CODEBOOK"] = "1"
 
     from python_sql_etl_project_spark import registry
     from python_sql_etl_project_spark.session import build_spark
@@ -50,6 +44,11 @@ def main() -> None:
         queries["mm_feature_extract"](spark, "/root/testdata/sf0.001").write.format(
             "noop"
         ).mode("overwrite").save()
+
+    if args.shared:
+        from bench import pin_shared_stages
+
+        print(f"shared stages: {pin_shared_stages(spark, args.sf)}", flush=True)
 
     jvm_system = spark.sparkContext._jvm.java.lang.System
     for name in args.names:
