@@ -359,9 +359,6 @@ HEADLINE = [
     "scd2_rebuild_fold_audit",
 ]
 
-#: Tolerated if absent so bench never breaks mid-build.
-OPTIONAL = []
-
 
 def pin_shared_stages(spark, sf_dir: str) -> dict[str, float]:
     """Build and pin the stages many headline queries share; return each
@@ -406,7 +403,7 @@ def main() -> None:
     spark = build_spark(app_name="bench", master=f"local[{cpus}]")
     queries = registry.all_queries()
 
-    names = HEADLINE + [n for n in OPTIONAL if n in queries]
+    names = HEADLINE
     missing = [n for n in names if n not in queries]
     if missing:
         print(f"FATAL: unknown bench queries: {missing}", file=sys.stderr)

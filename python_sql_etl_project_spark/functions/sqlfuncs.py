@@ -184,7 +184,7 @@ def fn_recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame loop with per-round checkpointing (the
     ``graph_bfs_levels`` pattern), not a recursive CTE.
     """
-    from ..session import finalize_unpersist
+    from ..session import finalize_unpersist, scoped_conf
 
     o = read_table(spark, sf_dir, "orders")
     w = PsWindow.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -196,35 +196,20 @@ def fn_recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     depth = nxt.agg(F.max("rn")).first()[0] or 1
     nxt.createOrReplaceTempView("nxt_rcte_mat")
-    prev_rows = spark.conf.get("spark.sql.cteRecursionRowLimit")
-    prev_depth = spark.conf.get("spark.sql.cteRecursionLevelLimit")
+    # the raised caps are restored even if analysis raises — the
+    # unlimited row cap must never leak session-wide.
+    # finalize_unpersist executes the recursion eagerly (localCheckpoint)
+    # while they are in force, so catalog and conf state restore cleanly
+    # (no session-global residue).
+    caps = {
+        "spark.sql.cteRecursionRowLimit": "-1",
+        "spark.sql.cteRecursionLevelLimit": str(max(depth + 1, 100)),
+    }
     try:
-        # Both conf.set calls sit INSIDE the try: if anything raises
-        # between them (or during analysis), the finally still restores
-        # the session's caps — the unlimited row cap must never leak
-        # session-wide (ADVICE r10). Eager analysis inlines the view;
-        # finalize_unpersist executes the recursion eagerly
-        # (localCheckpoint) while the raised limits are in force, so
-        # catalog and conf state restore cleanly below (no
-        # session-global residue). Audit mode (NO_CHECKPOINT) keeps the
-        # plan LAZY and only inspects it, never executes — so the cache
-        # serves no purpose there and is dropped before returning
-        # (executing the audit plan later would recompute the window
-        # per level, acceptable in a mode documented as
-        # "never set it in production paths").
-        spark.conf.set("spark.sql.cteRecursionRowLimit", "-1")
-        spark.conf.set(
-            "spark.sql.cteRecursionLevelLimit", str(max(depth + 1, 100))
-        )
-        out = spark.sql(RECURSIVE_CHAIN_OVER_MAT_SQL)
-        result = finalize_unpersist(out, nxt)
-        if result is out:  # NO_CHECKPOINT audit mode: caches were kept
-            nxt.unpersist()
-        return result
+        with scoped_conf(spark, caps):
+            return finalize_unpersist(spark.sql(RECURSIVE_CHAIN_OVER_MAT_SQL), nxt)
     finally:
         spark.catalog.dropTempView("nxt_rcte_mat")
-        spark.conf.set("spark.sql.cteRecursionRowLimit", prev_rows)
-        spark.conf.set("spark.sql.cteRecursionLevelLimit", prev_depth)
 
 
 # --------------------------------------------------------------------------

@@ -19,6 +19,8 @@ with one module owning every semantics-bearing config:
 from __future__ import annotations
 
 import os
+import time
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -163,30 +165,6 @@ def build_spark(
     return spark
 
 
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver testdata table as a temp view named after it.
-
-    Mirrors the reference's dict-of-DataFrames handoff
-    (``/root/reference/src/transform.py:128-134``) as catalog views, which
-    is the Spark-native equivalent (SURVEY §1.4).
-    """
-    for name in (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ):
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_table(spark: SparkSession, sf_dir: str, name: str):
     """Lazy parquet scan of one testdata table (column-pruned, pushdown-able).
 
@@ -227,16 +205,10 @@ def finalize_unpersist(df, *cached):
     immediately; the caller holds only result-sized blocks, freed when
     the DataFrame is garbage-collected.
 
-    ``SPARK_GRAFT_NO_CHECKPOINT=1`` returns the LAZY plan instead (no
-    checkpoint, caches kept): the plan-audit tests set it so they can
-    inspect the query's REAL physical plan — a checkpoint would truncate
-    lineage to a ``LogicalRDD`` scan and hide every join strategy from
-    the audit. Never set it in production paths.
+    The returned frame's own plan is a ``LogicalRDD`` scan; plan audits
+    and plan dumps read the plans that actually ran (every round and the
+    checkpoint itself) from Spark's status store via :func:`ran_plans`.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CHECKPOINT") == "1":
-        return df
     out = df.localCheckpoint(eager=True)
     for c in cached:
         c.unpersist()
@@ -249,6 +221,80 @@ def finalize_unpersist(df, *cached):
         if inner is not None:
             inner.unpersist()
     return out
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict):
+    """Set ``conf`` on the session for the ``with`` block, then restore
+    each key's prior value, on error too: later queries in the session
+    see the session's own settings."""
+    prev = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def _final_plan(plan: str) -> str:
+    """``plan`` without its AQE ``Initial Plan`` sections (the subtree
+    under each header is indented past the header's ``+-``)."""
+    out, cut = [], -1
+    for line in plan.splitlines():
+        if cut >= 0 and not line[: cut + 3].strip(" :"):
+            continue
+        cut = line.find("+- == Initial Plan ==")
+        if cut < 0:
+            out.append(line)
+    return "\n".join(out)
+
+
+def ran_plans(spark: SparkSession, run):
+    """Call ``run()`` and return ``(result, plans)``: one
+    ``(analyzed, final physical)`` plan pair per SQL execution the call
+    started, read from Spark's status store once the listener bus is
+    drained, then the returned frame's own pair (not executed).
+
+    A call whose executions outnumber ``spark.sql.ui.retainedExecutions``
+    loses the oldest from the store; that gap raises rather than audit
+    the call in part.
+    """
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id():
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+    with scoped_conf(spark, {"spark.sql.ui.explainMode": "extended"}):
+        bus.waitUntilEmpty()
+        mark = last_id()
+        df = run()
+        bus.waitUntilEmpty()
+        plans = []
+        for eid in range(mark + 1, last_id() + 1):
+            # the final plan is stored with the completion time, asynchronously
+            deadline = time.monotonic() + 5.0
+            while (e := store.execution(eid)).isDefined() and (
+                e.get().completionTime().isEmpty() and time.monotonic() < deadline
+            ):
+                time.sleep(0.01)
+            if e.isEmpty():
+                raise RuntimeError(
+                    f"SQL execution {eid} left the status store during the "
+                    f"call (more than spark.sql.ui.retainedExecutions ran)"
+                )
+            text = e.get().physicalPlanDescription()
+            analyzed = text.split("== Analyzed Logical Plan ==\n")[-1]
+            plans.append((
+                analyzed.split("\n== Optimized Logical Plan ==")[0],
+                _final_plan(text.split("== Physical Plan ==\n")[-1]),
+            ))
+    qe = df._jdf.queryExecution()
+    plans.append((qe.analyzed().toString(), _final_plan(qe.executedPlan().toString())))
+    return df, plans
 
 
 def tag_release(out, *caches):

@@ -22,7 +22,8 @@ import os
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..session import scoped_conf
 
 INGEST_ORDER_COL = "_ingest_order"
 
@@ -49,9 +50,10 @@ def spark_df_from_pandas(
     # Arrow conversion is semantic here, not just fast: pandas float NaN
     # means MISSING (the reference's world), and Arrow maps NaN → null.
     # The row-wise fallback keeps NaN as a float value, which a non-ANSI
-    # int cast would silently turn into 0.
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    return spark.createDataFrame(pdf)
+    # int cast would silently turn into 0. The conversion happens inside
+    # createDataFrame, so the session's own setting is restored after it.
+    with scoped_conf(spark, {"spark.sql.execution.arrow.pyspark.enabled": "true"}):
+        return spark.createDataFrame(pdf)
 
 
 def read_excel_sheet(
@@ -204,17 +206,3 @@ def extract_sources(
     if any(f is None for f in frames):
         return None
     return frames
-
-
-def events_stream_schema() -> T.StructType:
-    """Schema for the landing-zone events stream (used by streaming ops)."""
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )

@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
+from ..session import scoped_conf
 
 def _events_schema(spark: SparkSession, path: str) -> T.StructType:
     """File-stream sources require a user-declared schema; derive it from
@@ -109,34 +110,24 @@ def stream_events(
     return raw
 
 
-def _stream_state_partitions() -> str:
-    """Shuffle-partition count for STATEFUL streaming runs (r13, guide
-    §5 / r12-verdict item #1).
-
-    In Structured Streaming every stateful operator instantiates one
-    state store PER shuffle partition, and every micro-batch pays a
-    per-store commit (the HDFS-backed provider writes a delta file +
-    snapshot bookkeeping per store per batch; a stream-stream join
-    keeps FOUR stores per partition). That fixed cost scales with the
-    partition count, not the data, so partitions must be sized to
-    STATE VOLUME, never defaulted to the core count: at 32 partitions
-    the bounded AvailableNow replays here paid ~128 store commits per
-    batch for state that fits in a handful of MB. Measured paired A/B
-    (min-of-3, one session, sf0.1): signup_purchase_leftouter
-    7.75→2.92 s, chained_window_rollup 6.09→4.81, session_windows_typed
-    2.07→1.41, topk_users 1.15→0.71. The RocksDB provider was A/B'd in
-    the same session and measured WORSE at every partition count
-    (leftouter 8.67, chained rollup 13.88 — per-instance native setup
-    dominates bounded replays); documented as a negative, not adopted.
-
-    The value is a conf/env knob (``SPARK_GRAFT_STREAM_PARTITIONS``)
-    so a production deployment sizes it to its own state volume /
-    throughput (RocksDB + more partitions is the right posture for
-    TB-scale state); the default 8 is the measured optimum for
-    snapshot-bounded replays and is NOT tied to the local core count
-    (identical at ``local[8]`` and ``local[32]``).
-    """
-    return os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
+#: Shuffle-partition count for STATEFUL streaming runs (r13). Every
+#: stateful operator instantiates one state store PER shuffle partition,
+#: and every micro-batch pays a per-store commit (the HDFS-backed
+#: provider writes a delta file + snapshot bookkeeping per store per
+#: batch; a stream-stream join keeps FOUR stores per partition). That
+#: fixed cost scales with the partition count, not the data, so
+#: partitions are sized to STATE VOLUME, never defaulted to the core
+#: count: at 32 partitions the bounded AvailableNow replays here paid
+#: ~128 store commits per batch for state that fits in a handful of MB.
+#: Measured paired A/B (min-of-3, one session, sf0.1):
+#: signup_purchase_leftouter 7.75→2.92 s, chained_window_rollup
+#: 6.09→4.81, session_windows_typed 2.07→1.41, topk_users 1.15→0.71. The
+#: RocksDB provider was A/B'd in the same session and measured WORSE at
+#: every partition count (leftouter 8.67, chained rollup 13.88 —
+#: per-instance native setup dominates bounded replays). 8 is the
+#: measured optimum for snapshot-bounded replays and is not tied to the
+#: local core count (identical at ``local[8]`` and ``local[32]``).
+STREAM_STATE_PARTITIONS = "8"
 
 
 def _run_to_table(
@@ -151,27 +142,27 @@ def _run_to_table(
     same query body.
 
     The stream runs with state-volume-sized shuffle partitions (see
-    :func:`_stream_state_partitions`); the session conf is restored
+    ``STREAM_STATE_PARTITIONS``); the session conf is restored
     before returning, so batch queries are untouched. Partition count
     never changes streaming RESULTS — aggregations/joins/dedup are
     exact and watermarks derive from global max event time — it only
     sizes the state-store instance count.
     """
     checkpoint = tempfile.mkdtemp(prefix=f"ck_{name}_")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_partitions())
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with scoped_conf(
+            spark, {"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}
+        ):
+            q = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
         # the memory sink holds the rows driver-side; the checkpoint's
         # offsets/commits are dead after termination — reclaim per
         # invocation (bench/contract loops otherwise accumulate one
@@ -1125,11 +1116,6 @@ def transform_with_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas needs google.protobuf (the state-"
             "server protocol); not available in this environment"
         ) from e
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     out_schema = T.StructType(
         [
             T.StructField("user_id", T.LongType()),
@@ -1138,16 +1124,25 @@ def transform_with_state_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_purchases", T.LongType()),
         ]
     )
-    ev = stream_events(spark, sf_dir).select("user_id", "event_type", "value")
-    profiles = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_make_spend_processor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
+    # the stream reads the provider at start; later stateful streams in
+    # the session must not inherit it
+    rocksdb = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider"
     )
-    raw = _run_to_table(
-        spark, profiles, "strm_transform_with_state", "update"
-    )
+    with scoped_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}
+    ):
+        ev = stream_events(spark, sf_dir).select("user_id", "event_type", "value")
+        profiles = ev.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=_make_spend_processor(),
+            outputStructType=out_schema,
+            outputMode="Update",
+            timeMode="None",
+        )
+        raw = _run_to_table(
+            spark, profiles, "strm_transform_with_state", "update"
+        )
     from pyspark.sql.window import Window as _W
 
     w = F.row_number().over(

@@ -10,6 +10,9 @@ verdicts audit by hand each round — made permanent here:
   preceded by an aggregate / groupBy / limit / distinct (or explicitly
   allowlisted with a boundedness justification) is a driver-side loop
   over distributed data — the operator isn't distributed anymore.
+* **Every environment variable the package reads is declared** here:
+  an env switch forks library behaviour between callers, so a new one
+  cannot come back silently.
 """
 
 from __future__ import annotations
@@ -44,6 +47,19 @@ COLLECT_ALLOWLIST: tuple[tuple[str, str, str], ...] = (
     ("load/layout.py", "rows = merged",
      "month-grain merge of two pre-aggregated rollups (calendar-"
      "bounded; the .agg sites sit above the context window)"),
+)
+
+#: Every environment variable the package reads.
+DECLARED_ENV = {
+    "SPARK_GRAFT_CPUS",  # local-mode core count (session.build_spark)
+    "SPARK_DRIVER_MEMORY",  # driver heap (session.build_spark)
+    # scale probes force the sharded rank path (README §Scale design)
+    "SPARK_GRAFT_SMALL_FRAME_ROWS",
+    "TELEGRAM_TOKEN",  # report delivery (report.py)
+    "TELEGRAM_CHAT_ID",
+}
+_ENV_PAT = re.compile(
+    r"\b(?:environ|getenv)\b(?:\.get)?\s*[(\[]?\s*(?:(['\"])(\w+)\1)?"
 )
 
 
@@ -98,3 +114,17 @@ def test_collect_allowlist_entries_all_match():
         if marker not in src:
             stale.append(f"{f}: {marker!r}")
     assert not stale, "stale allowlist entries:\n" + "\n".join(stale)
+
+
+def test_env_reads_are_declared():
+    keys = set()
+    for path in _py_files():
+        rel = os.path.relpath(path, PKG)
+        src = open(path).read()
+        for m in _ENV_PAT.finditer(src):
+            line = src[: m.start()].count("\n") + 1
+            keys.add(m.group(2) or f"{rel}:{line}: non-literal env read")
+    assert keys == DECLARED_ENV, (
+        f"undeclared: {sorted(keys - DECLARED_ENV)}; "
+        f"declared but never read: {sorted(DECLARED_ENV - keys)}"
+    )

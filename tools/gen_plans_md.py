@@ -1,11 +1,11 @@
-"""Generate PLANS.md: formatted physical plans for representative queries.
+"""Generate PLANS.md: the physical plans representative queries ran.
 
 The scale claims in README §Scale design are plan properties — filters
 pushed to the parquet scan, dims broadcast, LSH joins on bucket keys,
-no cartesian anywhere. This tool dumps the actual optimized physical
-plan (sf0.1 inputs, AQE final plans where applicable) for one
-representative query per family so a reviewer can check the claims
-against the plans without running anything.
+no cartesian anywhere. This tool runs one representative query
+per family at sf0.1 and dumps the final adaptive plan of every SQL
+execution it ran, read from Spark's status store, so a reader can
+check the claims against the plans without running anything.
 
 Usage: python tools/gen_plans_md.py   (rewrites PLANS.md)
 """
@@ -232,9 +232,8 @@ SHOWCASE = {
     ),
     # -- round 11/12 ------------------------------------------------------
     "graph_label_propagation": (
-        "LPA round plan (round 11 rework, checkpoint neutralized for "
-        "the dump — production truncates lineage per round): the "
-        "decimal-packed argmax keeps BOTH aggregations in "
+        "LPA round plans (round 11 rework; each round is its own "
+        "checkpointed execution): the decimal-packed argmax keeps BOTH aggregations in "
         "whole-stage-codegen HashAggregate (no SortAggregate anywhere) "
         "and ONE repartition(src) exchange per round satisfies both "
         "groupBys; pinned by "
@@ -272,43 +271,35 @@ def main() -> None:
     # since round 10, so import order no longer matters)
     os.environ["SPARK_GRAFT_SMALL_FRAME_ROWS"] = "0"
     from python_sql_etl_project_spark import registry
-    from python_sql_etl_project_spark.session import build_spark
+    from python_sql_etl_project_spark.session import build_spark, ran_plans
 
     spark = build_spark(app_name="gen-plans", master="local[8]")
     registry.load_all()
 
     out = [
         "# PLANS — representative physical plans (auto-generated)\n",
-        "Regenerate with `python tools/gen_plans_md.py` (sf0.1 inputs; the\n"
-        "plan shown is Catalyst's optimized physical plan before execution —\n"
-        "AQE may further coalesce partitions / convert joins at runtime).\n",
+        "Regenerate with `python tools/gen_plans_md.py` (sf0.1 inputs). Each\n"
+        "query runs to a `noop` sink. For each of its SQL executions\n"
+        "(checkpointed rounds included) the plan shown is the\n"
+        "final adaptive plan that ran, read from Spark's status store.\n",
     ]
     for name, note in SHOWCASE.items():
-        os.environ["SPARK_GRAFT_NO_CHECKPOINT"] = "1"
-        if name == "graph_label_propagation":
-            # the per-round localCheckpoint truncates lineage, so the
-            # final plan is an RDD scan; neutralize it (like the plan
-            # audit test) to show the actual round plan
-            from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
-            _orig = _CDF.localCheckpoint
-            _CDF.localCheckpoint = lambda self, *a, **k: self
-            try:
-                df = registry.QUERIES[name](spark, SF_DIR)
-                plan = df._jdf.queryExecution().executedPlan().toString()
-            finally:
-                _CDF.localCheckpoint = _orig
-        else:
+        def run():
             df = registry.QUERIES[name](spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        os.environ.pop("SPARK_GRAFT_NO_CHECKPOINT", None)
-        # trim huge expression lists for readability, keep structure
-        lines = []
-        for ln in plan.splitlines():
-            lines.append(ln if len(ln) <= 320 else ln[:317] + "...")
-        plan = "\n".join(lines[:60])
-        if len(lines) > 60:
-            plan += f"\n... ({len(lines) - 60} more lines)"
+            df.write.format("noop").mode("overwrite").save()
+            return df
+
+        ran = [p for _, p in ran_plans(spark, run)[1][:-1]]
+        blocks = []
+        for i, plan in enumerate(ran, 1):
+            # trim huge expression lists for readability, keep structure
+            lines = [ln if len(ln) <= 320 else ln[:317] + "..." for ln in plan.splitlines()]
+            text = "\n".join(lines[:60])
+            if len(lines) > 60:
+                text += f"\n... ({len(lines) - 60} more lines)"
+            blocks.append(f"-- execution {i} of {len(ran)} --\n{text}" if len(ran) > 1 else text)
+        plan = "\n\n".join(blocks)
         out.append(f"\n## {name}\n\n{note}\n\n```\n{plan}\n```\n")
         spark.catalog.clearCache()
         print(f"dumped {name}", flush=True)
